@@ -180,13 +180,17 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // a query that throws is not timed: its exception aborts the query's
+    // measurement, the query is listed under `failed`, and the run exits
+    // non-zero once the artifacts are written
+    final case class QueryFailed(cause: Throwable) extends Exception(cause)
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       // toRdd.count(): executes the query's OWN plan (every output column
       // computed, sorts retained) without collecting rows to the driver —
       // a count() on top would let Catalyst prune the final projections
       try { fn(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case _: Throwable => -1L }
+      catch { case scala.util.control.NonFatal(e) => throw QueryFailed(e) }
       (System.nanoTime() - t0) / 1e9
     }
     val spreadLimit = sys.env.getOrElse("SPARK_GRAFT_SPREAD_LIMIT", "1.5").toDouble
@@ -244,8 +248,18 @@ object Bench {
       QRes(name, value, timed.max / math.max(timed.min, 1e-9), warm, timed,
         noisy, noisy && win.isEmpty, la, mp)
     }
-    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) => measure(name, fn, doWarm = true)
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    def attempt(name: String,
+                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+                doWarm: Boolean): Option[QRes] =
+      try Some(measure(name, fn, doWarm))
+      catch { case QueryFailed(e) =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name
+        None
+      }
+    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) => attempt(name, fn, doWarm = true)
     }
     // end-of-suite second chance (r10 VERDICT #2): a burst that hit a query
     // mid-suite has usually passed by now — each polluted query gets one
@@ -253,10 +267,9 @@ object Bench {
     // window replaces the value and clears the flag; otherwise the query
     // stays flagged and reports the global min across BOTH attempts. The
     // first attempt's runs ship as `prior_runs` either way.
-    val results = firstPass.map { r =>
-      if (!r.polluted) r
-      else {
-        val again = measure(r.name, SparkEntry.queries(r.name), doWarm = false)
+    val results = firstPass.flatMap { r =>
+      if (!r.polluted) Some(r)
+      else attempt(r.name, SparkEntry.queries(r.name), doWarm = false).map { again =>
         // either way the shipped record describes ATTEMPT 2 (its runs,
         // spread, loadavg, micro) with attempt 1 preserved as prior_runs —
         // mixing fields across attempts would break the self-describing
@@ -291,11 +304,13 @@ object Bench {
     val total = r3(results.map(_.value).sum)
     // cap at 4 names so a badly loaded session can't push the stdout line
     // past the driver's ~2000-char tail; the full set is in the detail file
-    val polluted = results.filter(_.polluted)
-    val pollutedList = (polluted.take(4)
-      .map(r => "\"" + r.name.takeWhile(_ != '_') + "\"") ++
-      (if (polluted.size > 4) Seq("\"+" + (polluted.size - 4) + "\"") else Nil))
-      .mkString("[", ",", "]")
+    // (polluted) or BENCH_LINE.json (failed)
+    def shortList(names: Seq[String]): String =
+      (names.take(4).map(n => "\"" + n.takeWhile(_ != '_') + "\"") ++
+        (if (names.size > 4) Seq("\"+" + (names.size - 4) + "\"") else Nil))
+        .mkString("[", ",", "]")
+    val pollutedList = shortList(results.filter(_.polluted).map(_.name))
+    val failedList = shortList(failed.toSeq)
     val calibJson = s"""{"pre":${r3(calibPre)},"post":${r3(calibPost)},""" +
       s""""ref":$CalibRef,"ref_date":"$CalibPinnedDate",""" +
       s""""factor":${r3(factor)},"pinned":$calibPinned}"""
@@ -322,6 +337,7 @@ object Bench {
       s""""action":"toRdd","calib":$calibJson,""" +
       s""""total_norm":${r3(total / factor)},""" +
       s""""polluted":$pollutedList,""" +
+      s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""queries":$qs,"sf":"$sfDir"}"""
     try Files.writeString(Paths.get(linePath), line + "\n")
     catch { case e: Throwable =>
@@ -336,9 +352,11 @@ object Bench {
     val compact = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""action":"toRdd","n_queries":${results.size},""" +
       s""""calib":$calibJson,"total_norm":${r3(total / factor)},""" +
-      s""""polluted":$pollutedList,"detail":"$detailPath",""" +
+      s""""polluted":$pollutedList,"failed":$failedList,""" +
+      s""""detail":"$detailPath",""" +
       s""""sf":"$sfDir"}"""
     println(compact)
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -6,16 +6,21 @@ import org.apache.spark.sql.types._
 
 import graft.config.WwConfig
 import graft.types.{ColStats, LogicalType, TypeSystem}
+import graft.util.Concurrency.runConcurrently
 
 /** Distributed logical-type inference.
   *
   * The reference evaluates per-type python predicates over a ≤100k-row sample
   * series-by-series (reference: woodwork/type_sys/type_system.py:336-437).
-  * Spark-first re-expression: ONE `agg` job computes every statistic each
-  * predicate needs, for every candidate column at once; the DAG walk then runs
-  * driver-side on the collected numbers. Cost is a single sample scan
-  * regardless of table width or height, and the plan is fully
-  * codegen/vectorized (no UDFs).
+  * Spark-first re-expression: each string or numeric column first collapses
+  * the cached sample into `(value, n)` groups, then ONE small agg over those
+  * groups computes every statistic a predicate needs, each count weighted by
+  * `n`. A predicate — the regex guards and the 12-format datetime cascade —
+  * therefore runs once per DISTINCT sample value, not once per row, and the
+  * distinct count is the number of non-null groups. Other columns need only
+  * their total and non-null counts. The per-column jobs run concurrently;
+  * the DAG walk then runs driver-side on the collected numbers. The plans
+  * are fully codegen'd (no UDFs).
   */
 object TypeInference {
 
@@ -41,30 +46,23 @@ object TypeInference {
     */
   private def tsParse(s: Column): Column = LogicalType.parseTimestamp(s)
 
-  private def cnt(cond: Column): Column =
-    coalesce(sum(when(cond, 1L)), lit(0L))
+  /** The lowercased boolean tokens, in the order of the `boolTokens` flags. */
+  private[graft] def boolTokenList: Seq[String] =
+    WwConfig.options.booleanTransformMappings.keySet.toSeq.sorted
 
-  /** Aggregate expressions producing one struct per column; collected into
-    * [[ColStats]] driver-side.
+  /** Per-value predicates of a string or numeric column, keyed by the
+    * [[ColStats]] field each one counts: the field is the number of sample
+    * rows whose value `v` satisfies the predicate.
     */
-  private def statExprs(name: String, dt: DataType): Column = {
-    val opts = WwConfig.options
-    val c = col(name)
-    val allBoolTokens =
-      opts.booleanTransformMappings.keySet.toSeq.sorted
+  private[graft] def predicates(v: Column, dt: DataType): Seq[(String, Column)] =
     dt match {
       case StringType =>
-        val s = LogicalType.replaceNans(c, StringType)
-        val lowered = lower(s)
-        val dbl = s.try_cast(DoubleType)
-        struct(
-          count(lit(1)).as("total"),
-          count(s).as("nonNull"),
-          count_distinct(s).as("distinct"),
-          cnt(s.isNotNull && !s.rlike(intRegex)).as("intFail"),
-          cnt(s.isNotNull && dbl.isNull).as("dblFail"),
-          cnt(dbl.isNotNull && dbl % 1 =!= 0).as("dblNonIntegral"),
-          lit(0L).as("numNonIntegral"),
+        val opts = WwConfig.options
+        val dbl = v.try_cast(DoubleType)
+        Seq(
+          "intParseFail" -> (v.isNotNull && !v.rlike(intRegex)),
+          "dblParseFail" -> (v.isNotNull && dbl.isNull),
+          "dblNonIntegral" -> (dbl.isNotNull && dbl % 1 =!= 0),
           // cheap disqualifier ahead of the 12-format cascade: no supported
           // datetime shape (numeric separators, 3-letter month abbrevs, 'T')
           // contains a run of 4+ letters, and Or short-circuits — so
@@ -72,105 +70,105 @@ object TypeInference {
           // Exception: a trailing region zone-id ("... Europe/Paris"), which
           // the native timestamp cast accepts — those fall through to the
           // parse instead of being disqualified by their letter run.
-          cnt(s.isNotNull &&
-            ((s.rlike("[A-Za-z]{4}") &&
-              !s.rlike("[A-Za-z_]+(/[A-Za-z_]+)+\\s*$")) || tsParse(s).isNull))
-            .as("dtFail"),
-          cnt(s.isNotNull && !lowered.isin(allBoolTokens: _*)).as("boolBad"),
-          // per-token presence flags instead of collect_set: a
-          // TypedImperativeAggregate in the agg list forces the ENTIRE wide
-          // agg out of whole-stage codegen; 8 max(when(...)) flags stay in.
-          array(allBoolTokens.map(t =>
-            coalesce(max(when(lowered === t, 1)), lit(0))): _*).as("boolTokens"),
-          // each expensive regex is short-circuited by a cheap guard: a row
+          "dtParseFail" -> (v.isNotNull &&
+            ((v.rlike("[A-Za-z]{4}") &&
+              !v.rlike("[A-Za-z_]+(/[A-Za-z_]+)+\\s*$")) || tsParse(v).isNull)),
+          "boolBadToken" -> (v.isNotNull && !lower(v).isin(boolTokenList: _*)),
+          // each expensive regex is short-circuited by a cheap guard: a value
           // failing the guard counts as a fail without running the regex
-          cnt(s.isNotNull && !(s.contains("@") &&
-            LogicalType.startMatch(s, opts.emailInferenceRegex)))
-            .as("emailFail"),
-          cnt(s.isNotNull && !(length(s).between(7, 24) &&
-            LogicalType.startMatch(s, opts.phoneInferenceRegex)))
-            .as("phoneFail"),
-          cnt(s.isNotNull && !(length(s).between(5, 10) &&
-            LogicalType.startMatch(s, opts.postalCodeInferenceRegex)))
-            .as("postalFail"),
-          cnt(s.isNotNull && !(s.startsWith("http") &&
-            LogicalType.startMatch(s, opts.urlInferenceRegex)))
-            .as("urlFail"),
-          cnt(s.isNotNull && !(length(s).between(2, 45) &&
-            (s.contains(".") || s.contains(":")) &&
-            LogicalType.startMatch(s,
-              s"(${opts.ipv4InferenceRegex})|(${opts.ipv6InferenceRegex})")))
-            .as("ipFail"),
-          // NL word-counting is NOT computed here: a higher-order filter
-          // lambda falls out of codegen and evaluates the 1000-word set
-          // linearly per token. It runs as a deferred explode+InSet job only
-          // for columns nothing else matched — which is also exactly the
-          // reference's evaluation order (type_system.py:391-411).
-          lit(Double.NaN).as("nlAvg"),
+          "emailFail" -> (v.isNotNull && !(v.contains("@") &&
+            LogicalType.startMatch(v, opts.emailInferenceRegex))),
+          "phoneFail" -> (v.isNotNull && !(length(v).between(7, 24) &&
+            LogicalType.startMatch(v, opts.phoneInferenceRegex))),
+          "postalFail" -> (v.isNotNull && !(length(v).between(5, 10) &&
+            LogicalType.startMatch(v, opts.postalCodeInferenceRegex))),
+          "urlFail" -> (v.isNotNull && !(v.startsWith("http") &&
+            LogicalType.startMatch(v, opts.urlInferenceRegex))),
+          "ipFail" -> (v.isNotNull && !(length(v).between(2, 45) &&
+            (v.contains(".") || v.contains(":")) &&
+            LogicalType.startMatch(v,
+              s"(${opts.ipv4InferenceRegex})|(${opts.ipv6InferenceRegex})"))),
           // date-shape screen for the learned-format deferred pass: only a
           // column whose EVERY non-null value looks like a 3-field date pays
           // the driver-side format vote (DatetimeFormat.guessFormat)
-          cnt(s.isNotNull && s.rlike(DatetimeFormat.dateShapeRegex))
-            .as("dateShape")
-        ).as(name)
-      case _: NumericType =>
-        val nonIntegral: Column =
-          if (LogicalType.isFractionalType(dt)) cnt(c.isNotNull && c % 1 =!= 0)
-          else lit(0L)
-        struct(
-          count(lit(1)).as("total"),
-          count(c).as("nonNull"),
-          count_distinct(c).as("distinct"),
-          lit(0L).as("intFail"), lit(0L).as("dblFail"),
-          lit(0L).as("dblNonIntegral"),
-          nonIntegral.as("numNonIntegral"),
-          lit(0L).as("dtFail"), lit(0L).as("boolBad"),
-          array().cast(ArrayType(IntegerType)).as("boolTokens"),
-          lit(1L).as("emailFail"), lit(1L).as("phoneFail"),
-          lit(1L).as("postalFail"), lit(1L).as("urlFail"), lit(1L).as("ipFail"),
-          lit(Double.NaN).as("nlAvg"), lit(0L).as("dateShape")
-        ).as(name)
-      case _ =>
-        struct(
-          count(lit(1)).as("total"),
-          count(c).as("nonNull"),
-          lit(0L).as("distinct"),
-          lit(0L).as("intFail"), lit(0L).as("dblFail"),
-          lit(0L).as("dblNonIntegral"), lit(0L).as("numNonIntegral"),
-          lit(0L).as("dtFail"), lit(0L).as("boolBad"),
-          array().cast(ArrayType(IntegerType)).as("boolTokens"),
-          lit(1L).as("emailFail"), lit(1L).as("phoneFail"),
-          lit(1L).as("postalFail"), lit(1L).as("urlFail"), lit(1L).as("ipFail"),
-          lit(Double.NaN).as("nlAvg"), lit(0L).as("dateShape")
-        ).as(name)
+          "dateShapeCount" -> (v.isNotNull && v.rlike(DatetimeFormat.dateShapeRegex)))
+      case _ if LogicalType.isFractionalType(dt) =>
+        Seq("numNonIntegral" -> (v.isNotNull && v % 1 =!= 0))
+      case _ => Nil
     }
+
+  /** Per-token presence flags of a string column, in [[boolTokenList]]
+    * order. max(when(...)) instead of collect_set: a TypedImperativeAggregate
+    * in the agg list forces the ENTIRE agg out of whole-stage codegen.
+    */
+  private def boolTokenFlags(v: Column): Column = {
+    val lowered = lower(v)
+    array(boolTokenList.map(t =>
+      coalesce(max(when(lowered === t, 1)), lit(0))): _*).as("boolTokens")
   }
 
-  private def rowToStats(r: Row, idx: Int, dt: DataType): ColStats = {
-    val s = r.getStruct(idx)
+  /** [[ColStats]] of one column over the sample. A string or numeric column
+    * is collapsed to `(v, n)` groups first, keyed by the null-replaced
+    * string (so the sentinels fall into the null group) or by the raw
+    * number. Then `totalCount` is sum(n), `nonNullCount` sum(n) over
+    * non-null `v`, `distinctCount` count(v), and each predicate count
+    * sum(when(pred, n)). NL word counting is NOT done here: it runs as a
+    * deferred explode+InSet job only for columns nothing else matched — the
+    * reference's evaluation order (type_system.py:391-411).
+    */
+  private def columnStats(sampled: DataFrame, f: StructField): ColStats = {
+    val c = col(f.name)
+    val row = f.dataType match {
+      case dt @ (StringType | _: NumericType) =>
+        val v = col("v")
+        val n = col("n")
+        def weighted(cond: Column) = coalesce(sum(when(cond, n)), lit(0L))
+        val stats = Seq(
+          weighted(lit(true)).as("totalCount"),
+          weighted(v.isNotNull).as("nonNullCount"),
+          count(v).as("distinctCount")) ++
+          predicates(v, dt).map { case (k, cond) => weighted(cond).as(k) } ++
+          (if (dt == StringType) Seq(boolTokenFlags(v)) else Nil)
+        sampled.groupBy(LogicalType.replaceNans(c, dt).as("v"))
+          .agg(count(lit(1)).as("n"))
+          .agg(stats.head, stats.tail: _*).head()
+      case _ =>
+        sampled.agg(count(lit(1)).as("totalCount"), count(c).as("nonNullCount"))
+          .head()
+    }
+    toStats(row, f.dataType)
+  }
+
+  /** Reads the named stats of one column. A stat its type does not compute
+    * is 0, except the regex fail counts, which are 1 so that no regex type
+    * matches a non-string column.
+    */
+  private def toStats(r: Row, dt: DataType): ColStats = {
+    val names = r.schema.fieldNames.toSet
+    def stat(k: String, absent: Long): Long =
+      if (names(k)) r.getAs[Long](k) else absent
     ColStats(
       dataType = dt,
-      totalCount = s.getLong(0),
-      nonNullCount = s.getLong(1),
-      distinctCount = s.getLong(2),
-      intParseFail = s.getLong(3),
-      dblParseFail = s.getLong(4),
-      dblNonIntegral = s.getLong(5),
-      numNonIntegral = s.getLong(6),
-      dtParseFail = s.getLong(7),
-      boolBadToken = s.getLong(8),
-      boolTokens = {
-        val flags = Option(s.getSeq[Int](9)).getOrElse(Seq.empty)
-        val tokens = WwConfig.options.booleanTransformMappings.keySet.toSeq.sorted
-        tokens.zip(flags).collect { case (t, f) if f == 1 => t }.toSet
-      },
-      emailFail = s.getLong(10),
-      phoneFail = s.getLong(11),
-      postalFail = s.getLong(12),
-      urlFail = s.getLong(13),
-      ipFail = s.getLong(14),
-      nlAvgCommonWords = if (s.isNullAt(15)) Double.NaN else s.getDouble(15),
-      dateShapeCount = s.getLong(16)
+      totalCount = stat("totalCount", 0L),
+      nonNullCount = stat("nonNullCount", 0L),
+      distinctCount = stat("distinctCount", 0L),
+      intParseFail = stat("intParseFail", 0L),
+      dblParseFail = stat("dblParseFail", 0L),
+      dblNonIntegral = stat("dblNonIntegral", 0L),
+      numNonIntegral = stat("numNonIntegral", 0L),
+      dtParseFail = stat("dtParseFail", 0L),
+      boolBadToken = stat("boolBadToken", 0L),
+      boolTokens =
+        if (!names("boolTokens")) Set.empty
+        else boolTokenList.zip(r.getAs[Seq[Int]]("boolTokens"))
+          .collect { case (t, 1) => t }.toSet,
+      emailFail = stat("emailFail", 1L),
+      phoneFail = stat("phoneFail", 1L),
+      postalFail = stat("postalFail", 1L),
+      urlFail = stat("urlFail", 1L),
+      ipFail = stat("ipFail", 1L),
+      nlAvgCommonWords = Double.NaN,
+      dateShapeCount = stat("dateShapeCount", 0L)
     )
   }
 
@@ -184,9 +182,6 @@ object TypeInference {
     cleanup()
     stats
   }
-
-  private def runConcurrently[A](items: Seq[A])(work: A => Unit): Unit =
-    graft.util.Concurrency.runConcurrently(items)(work)
 
   /** Returns the stats, the (cached) sample frame for follow-up jobs (the NL
     * pass reuses it), and a cleanup thunk that releases ONLY the cache this
@@ -211,21 +206,25 @@ object TypeInference {
     val sampled = if (ownCache) base.cache() else base
     val cleanup: () => Unit =
       if (ownCache) () => { sampled.unpersist(); () } else () => ()
-    sampled.count() // ONE full-table scan materializes the bounded sample
     val fields = df.schema.fields.filter(f => cols.contains(f.name))
-    // One SMALL agg per column, run concurrently over the cached sample:
-    // a single wide agg across every column is one giant whole-stage-codegen
-    // function whose Janino compile costs more than the sample scan itself;
-    // per-column plans compile in parallel on the job-submitter threads and
-    // each re-scan hits the in-memory bounded sample.
-    val rows = new Array[Row](fields.length)
-    runConcurrently(fields.indices) { i =>
-      val f = fields(i)
-      rows(i) = sampled.agg(statExprs(f.name, f.dataType)).head()
-    }
-    (fields.zipWithIndex.map { case (f, i) =>
-      f.name -> rowToStats(rows(i), 0, f.dataType)
-    }.toMap, sampled, cleanup)
+    val stats = new Array[ColStats](fields.length)
+    try {
+      // ONE scan materializes the bounded sample before the fan-out.
+      // Without it, every concurrent column plan's adaptive cache stage
+      // submits its own materialization job, and all but one of their tasks
+      // hold a core while they wait on the block lock (measured: 2 more
+      // jobs and ~40% more task time per call, no faster).
+      sampled.count()
+      // One SMALL agg per column, run concurrently over the cached sample:
+      // a single wide agg across every column is one giant whole-stage-codegen
+      // function whose Janino compile costs more than the sample scan itself;
+      // per-column plans compile in parallel on the job-submitter threads and
+      // each re-scan hits the in-memory bounded sample.
+      runConcurrently(fields.indices) { i =>
+        stats(i) = columnStats(sampled, fields(i))
+      }
+    } catch { case e: Throwable => cleanup(); throw e }
+    (fields.map(_.name).zip(stats).toMap, sampled, cleanup)
   }
 
   /** Mean common-word count per cell for one column over the sample
@@ -279,9 +278,13 @@ object TypeInference {
         case (n, lt) if lt == ts.defaultType && stats(n).dataType == StringType &&
           stats(n).nonNullCount > 0 => n
       }.toSeq
-      afterDt ++ nlCandidates.map { n =>
-        val avgWords = nlAvgCommonWords(sampled, n, stats(n).nonNullCount)
-        n -> ts.inferFromStats(stats(n).copy(nlAvgCommonWords = avgWords))
+      val avgWords = new Array[Double](nlCandidates.length)
+      runConcurrently(nlCandidates.indices) { i =>
+        val n = nlCandidates(i)
+        avgWords(i) = nlAvgCommonWords(sampled, n, stats(n).nonNullCount)
+      }
+      afterDt ++ nlCandidates.zip(avgWords).map { case (n, avg) =>
+        n -> ts.inferFromStats(stats(n).copy(nlAvgCommonWords = avg))
       }
     } finally cleanup()
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.frame.WoodworkFrame
 import graft.types.LogicalType
+import graft.util.Concurrency.runConcurrently
 
 /** Distributed column profiling (reference: `df.ww.describe`,
   * woodwork/table_accessor.py:1454-1567; engine
@@ -219,9 +220,6 @@ object Describe {
     val r = meltStatsFull(df, cols, Map.empty)
     (r._1, r._2)
   }
-
-  private def runConcurrently[A](items: Seq[A])(work: A => Unit): Unit =
-    graft.util.Concurrency.runConcurrently(items)(work)
 
   /** Buckets per region and level of the exact-quantile histogram walk:
     * regions·4096 groups per agg keeps the shuffle a few KB while shrinking
